@@ -98,33 +98,24 @@ def spread(df: DataFrame) -> DataFrame:
     ``df.rdd.getNumPartitions()`` path, which is correct but pays the
     ~35 ms physical-planning cost the hint exists to avoid.
 
-    The arithmetic estimate ignores Spark's dynamic maxSplitBytes
-    floor (min with max(openCostInBytes, bytes/defaultParallelism)),
-    so ``est`` is a LOWER bound on actual scan partitions: the skip
-    branch (est >= cores) is always safe, and the repartition branch
-    can at worst fire redundantly on an input Spark would already have
-    split further — a no-op-sized shuffle, accepted and documented
-    rather than re-deriving Spark's split packing here.
+    With the hint, the scan's split count is estimated the way Spark
+    sizes splits for a single file (FilePartition.maxSplitBytes):
+    maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    (bytes + openCostInBytes) / defaultParallelism)), and est =
+    ceil(bytes / maxSplitBytes). This dynamic estimate matched
+    ``df.rdd.getNumPartitions()`` on every single-file input measured
+    (tiny, 50 MB and 300 MB, SCALING_MEASURED.md), so files in the
+    128 MB–4 GB band that Spark already fans out are not shuffled
+    again. Frames without the hint, or with unit-suffixed ("128MB")
+    split confs, use the exact partition count instead.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     src_bytes = getattr(df, "_sg_src_bytes", None)
     if src_bytes is not None:
-        # Arithmetic split estimate off the load_table size hint —
-        # same decision as counting scan partitions without the
-        # ~35 ms physical-planning cost of df.rdd per plan build
-        # (round-10 optimization pass). Round 11 (ADVICE r10 item 1):
-        # the estimate now replicates Spark's DYNAMIC split sizing for
-        # a single file — maxSplitBytes = min(maxPartitionBytes,
-        # max(openCostInBytes, (size + openCost) / defaultParallelism))
-        # (FilePartition.maxSplitBytes) — instead of the static
-        # ceil(size / maxPartitionBytes) lower bound, which undercounted
-        # splits for files in the 128 MB–4 GB band (bytesPerCore < 128 MB
-        # shrinks the split) and fired a redundant full-shuffle
-        # repartition on input Spark had already fanned out; verified
-        # against df.rdd.getNumPartitions() at 50 MB/300 MB/tiny in
-        # SCALING_MEASURED.md. Falls back to the exact partition count
-        # for frames without the hint or unit-suffixed conf values.
+        # the split estimate described in the docstring: the same
+        # decision as counting scan partitions, without the ~35 ms of
+        # physical planning df.rdd costs per plan build
         def _conf_bytes(key: str, default: str) -> int | None:
             try:
                 return int(df.sparkSession.conf.get(key, default))

@@ -21,6 +21,11 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 from ..functions.numeric import nz
+from ..streaming.drains import (
+    TOPK_K,
+    stream_topk_drain,
+    stream_url_frontier_drain,
+)
 
 # Shared Spark/DuckDB regexes — RE2-compatible (no backrefs/lookahead).
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -113,235 +118,6 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "contamination"
             ),
         )
-    )
-
-
-def stream_url_frontier_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING crawl-frontier dedup — the incremental twin of
-    ``url_canonical_dedup``: discovered URLs arrive in micro-batches,
-    are canonicalized IN-STREAM with the exact map-side transform the
-    batch query uses (``_canonicalized`` — stateless string algebra,
-    legal on a streaming frame), and
-    ``dropDuplicatesWithinWatermark(["canonical"])`` admits each
-    RESOURCE once across batches — the "have we already scheduled this
-    URL" gate every crawler runs, with state bounded by the watermark
-    horizon instead of growing with the crawl.
-
-    Fixture layout (what makes the state path non-trivial): the staged
-    stream is range-partitioned on the spelling VARIANT, so successive
-    micro-batches carry DIFFERENT spellings of the same resources —
-    re-emission is prevented only by canonical-key state held across
-    batches, never by in-batch uniqueness. Determinism under racy
-    in-batch winners uses the stream_dedup_drain trick: the emitted
-    projection (canonical, host) is identical whichever raw spelling
-    wins the state race, so the drained append output is EXACTLY the
-    distinct resource universe — the oracle. Every crawl_ts shares one
-    frontier epoch (doc_id microseconds apart), so nothing is ever
-    late; watermark-DISCARD itself is graded by
-    stream_late_drop_drain."""
-    import glob as _glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
-    from ..operators.temporal import (  # noqa: PLC0415
-        _drain_bounded,
-        _drain_session,
-    )
-    from ..streaming.docs import _staged_dir  # noqa: PLC0415
-
-    spark = _drain_session(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    feed = _planted_urls(docs).withColumn(
-        "crawl_ts",
-        F.timestamp_micros(
-            F.lit(1_600_000_000_000_000) + F.col("doc_id")
-        ),
-    )
-
-    def build(d: str) -> None:
-        feed.repartitionByRange(
-            4, F.col("v"), F.col("doc_id")
-        ).write.mode("overwrite").parquet(d)
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        "url_frontier4",
-        sf_dir,
-        "url_frontier_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-    from ..operators.temporal import (  # noqa: PLC0415
-        DRAIN_FILES_PER_TRIGGER,
-    )
-
-    raw = (
-        spark.readStream.schema(feed.schema)
-        # 2 variant-range files per trigger (round-11 trigger
-        # coarsening — rationale at DRAIN_FILES_PER_TRIGGER): the
-        # emitted universe is batching-independent, and re-arrivals
-        # still cross the remaining batch boundary (every canonical
-        # resource appears in BOTH batches' spelling ranges)
-        .option("maxFilesPerTrigger", DRAIN_FILES_PER_TRIGGER)
-        .format("parquet")
-        .load(staged)
-    )
-    res = (
-        _canonicalized(raw, keep=["crawl_ts"])
-        .withWatermark("crawl_ts", "48 hours")
-        .dropDuplicatesWithinWatermark(["canonical"])
-        .select("canonical", "host")
-    )
-    return _drain_bounded(
-        spark, res, "stream_url_frontier_sink", "append", sf_dir=sf_dir
-    )
-
-
-TOPK_K = 5  # podium size held per source in the ranked state
-
-
-def stream_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING per-source best-K — the TENTH streaming state shape:
-    BOUNDED RANKED state. Every shape graded so far holds either a
-    scalar accumulator (totals), a set (dedup / frontier), an interval
-    (session), or a match buffer (joins); this one holds an ORDERED
-    top-K podium per key that each micro-batch must merge into and
-    truncate — the "keep only the best K documents per domain" gate a
-    quality-curated pretraining mix runs at ingest, where K is the
-    per-domain budget and score is the quality signal.
-
-    Execution: the documents table is staged as four files
-    HASH-partitioned on doc_id, one file per trigger, so each source's
-    contenders are scattered across micro-batches and the final podium
-    exists only in cross-batch state (pinned in tests: every source's
-    final top-K draws from ≥2 staged files at sf0.01). State per key is
-    exactly K (score, doc_id) pairs plus a seen-counter — O(K), never
-    O(stream); merging is associative (top-K of a union = top-K of
-    merged top-Ks), so the final podium is independent of how the
-    hash split the stream, which is what makes it reconcilable.
-
-    Determinism of the drained sink: update-mode emits one snapshot per
-    (source, batch-with-rows), and ``n_seen`` strictly increases across
-    a key's snapshots (a key's update fires only when the batch carries
-    its rows), so the FINAL podium per source is the snapshot at
-    max(n_seen) — selected by window below. Ties in score are broken
-    by doc_id ascending in both the state merge and the oracle's
-    row_number ordering (the sf0.01 fixture has 15 in-source tie
-    classes, so the tie path is genuinely exercised).
-
-    At 100 TB: state is keys × K rows; the only shuffle is the
-    groupBy(source) exchange every stateful operator pays. The
-    update-mode snapshot stream is podium-grain, not input-grain."""
-    import glob as _glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql import Window  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState  # noqa: PLC0415
-
-    from ..operators.temporal import (  # noqa: PLC0415
-        _drain_bounded,
-        _drain_session,
-    )
-    from ..streaming.docs import _staged_dir  # noqa: PLC0415
-
-    spark = _drain_session(spark)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-
-    def build(d: str) -> None:
-        docs.repartition(4, F.col("doc_id")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        "topk_docs4",
-        sf_dir,
-        "topk_docs_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-
-    out_schema = "source string, rnk int, doc_id long, score long, n_seen long"
-    state_schema = "doc_ids array<long>, scores array<long>, n_seen long"
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            doc_ids, scores, n_seen = state.get
-            pairs = [
-                (int(s), int(d)) for s, d in zip(scores, doc_ids)
-            ]
-        else:
-            pairs, n_seen = [], 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            pairs.extend(
-                zip(
-                    pdf["n_chars"].astype("int64").tolist(),
-                    pdf["doc_id"].astype("int64").tolist(),
-                )
-            )
-        # highest score first, doc_id ascending inside a tie class —
-        # the oracle's ORDER BY n_chars DESC, doc_id
-        pairs.sort(key=lambda p: (-p[0], p[1]))
-        pairs = pairs[:TOPK_K]
-        state.update(
-            (
-                [d for _, d in pairs],
-                [s for s, _ in pairs],
-                int(n_seen),
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "source": [key[0]] * len(pairs),
-                "rnk": list(range(1, len(pairs) + 1)),
-                "doc_id": [d for _, d in pairs],
-                "score": [s for s, _ in pairs],
-                "n_seen": [int(n_seen)] * len(pairs),
-            }
-        )
-
-    from ..operators.temporal import (  # noqa: PLC0415
-        DRAIN_FILES_PER_TRIGGER,
-    )
-
-    raw = (
-        spark.readStream.schema(docs.schema)
-        # 2 doc_id-hash files per trigger (round-11 trigger coarsening
-        # — rationale at DRAIN_FILES_PER_TRIGGER): top-K merge is
-        # associative so the final podium is batching-independent, and
-        # the hash split still scatters every source's contenders
-        # across both batches
-        .option("maxFilesPerTrigger", DRAIN_FILES_PER_TRIGGER)
-        .format("parquet")
-        .load(staged)
-    )
-    res = raw.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-    snap = _drain_bounded(
-        spark, res, "stream_topk_sink", "update",
-        sf_dir=sf_dir, python_stateful=True,
-    )
-    final_seen = F.max("n_seen").over(Window.partitionBy("source"))
-    return (
-        snap.withColumn("mx", final_seen)
-        .where(F.col("n_seen") == F.col("mx"))
-        .select("source", "rnk", "doc_id", "score")
     )
 
 

@@ -200,38 +200,29 @@ def _staged_dir(kind: str, sf_dir: str, prefix: str, build, src: str) -> str:
     within a process rebuilds rather than serving stale contents (the
     symlink stagers were already immune; the materialized media stager
     was not)."""
-    import atexit  # noqa: PLC0415
     import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     key = (kind, sf_dir, _source_fingerprint(src))
     cached = _STAGED_DIRS.get(key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    d = tempfile.mkdtemp(prefix=prefix)
+    d = fresh_tmpdir(prefix)
     build(d)
-    if not _STAGED_ALL:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True) for p in _STAGED_ALL
-            ]
-        )
     _STAGED_DIRS[key] = d
-    _STAGED_ALL.append(d)
     return d
 
 
-def fresh_tmpdir(prefix: str) -> str:
-    """A fresh (never cached) temp dir that rides the shared atexit
-    cleanup — for sinks that MUTATE across a stream's lifetime (e.g.
-    versioned-snapshot merge targets), where reusing a cached dir
-    would replay on top of a previous call's history."""
+def fresh_tmpdir(prefix: str, dir: str | None = None) -> str:
+    """A fresh (never cached) temp dir under ``dir`` (default: the
+    system temp dir) that rides the shared atexit cleanup — for sinks
+    that MUTATE across a stream's lifetime (e.g. versioned-snapshot
+    merge targets), where reusing a cached dir would replay on top of a
+    previous call's history, and for stream checkpoints."""
     import atexit  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    d = tempfile.mkdtemp(prefix=prefix)
+    d = tempfile.mkdtemp(prefix=prefix, dir=dir)
     if not _STAGED_ALL:
         atexit.register(
             lambda: [
@@ -240,6 +231,17 @@ def fresh_tmpdir(prefix: str) -> str:
         )
     _STAGED_ALL.append(d)
     return d
+
+
+def release_tmpdir(d: str) -> None:
+    """Delete ``d`` now rather than at interpreter exit (a long session
+    running many drains would otherwise hold every checkpoint tree in
+    RAM-backed /dev/shm)."""
+    import shutil  # noqa: PLC0415
+
+    shutil.rmtree(d, ignore_errors=True)
+    if d in _STAGED_ALL:
+        _STAGED_ALL.remove(d)
 
 
 def clear_staged_dirs() -> None:

@@ -637,315 +637,6 @@ def purchase_attribution(
     ).select("event_id", "user_id", "purchase_ts", "click_id", "click_ts")
 
 
-def read_events_stream_parts(
-    spark: SparkSession,
-    sf_dir: str,
-    n_parts: int = 4,
-    files_per_trigger: int = 1,
-) -> DataFrame:
-    """Multi-micro-batch file stream: the events table re-staged as
-    ``n_parts`` files, ``files_per_trigger`` files per trigger — the
-    local stand-in for a stream that arrives over time (Kafka offsets,
-    hourly drops). Timestamps are already µs (conversion happens in
-    the batch staging read), so the streaming side needs no legacy
-    conf. Staged through the shared ``_staged_dir`` cache (keyed on
-    kind + source fingerprint, cleaned at exit) so repeated calls —
-    the oracle sweeps, plan lint over every query, tests — share ONE
-    rewrite instead of leaking a full table copy per invocation.
-
-    ``files_per_trigger`` is the trigger-granularity knob (round-11
-    optimization pass, VERDICT r10 item 2): each micro-batch pays a
-    fixed scaffolding cost (~0.5–1 s of incremental planning +
-    offset-WAL + state commits at any input size), so a drain whose
-    RESULT is provably batching-independent coarsens to 2 files per
-    trigger — same staged fixture, same file order, half the fixed
-    cost, still ≥2 batches so cross-batch state stays exercised.
-    Drains whose oracle models per-file batch boundaries keep 1."""
-    import os
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        batch.repartition(n_parts).write.mode("overwrite").parquet(d)
-
-    staged = _staged_dir(
-        f"events_parts{n_parts}",
-        sf_dir,
-        "events_parts_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .format("parquet")
-        .load(staged)
-    )
-
-
-def read_events_stream_ordered(
-    spark: SparkSession,
-    sf_dir: str,
-    n_parts: int = 4,
-    files_per_trigger: int = 1,
-) -> DataFrame:
-    """Multi-micro-batch file stream in EVENT-TIME ORDER: the events
-    table range-partitioned on ``ts`` into ``n_parts`` files, staged
-    with strictly increasing modification times, read one file per
-    trigger — so batch k+1 contains only events with ts >= every event
-    of batch k (range partitioning guarantees the order property for
-    ANY sampled boundaries; part-00000 is the lowest range). This is
-    the local stand-in for the common production reality of a
-    roughly-time-ordered source (Kafka with event-time ≈ ingest-time,
-    hourly file drops), under which NO input is ever late relative to
-    the watermark — the precondition that makes cross-batch
-    stream-stream JOIN state exactly replayable against a batch oracle
-    (see stream_join_multibatch_drain). FileStreamSource picks files
-    oldest-mtime-first (latestFirst=false default); mtimes are pinned
-    1s apart so the order is deterministic, never a same-second tie.
-
-    ``files_per_trigger``: trigger-granularity knob — see
-    read_events_stream_parts. A batch of k consecutive ordered files
-    is still ordered relative to every other batch, so the no-late-
-    input precondition (and every result derived from it) holds for
-    ANY value; drains whose graded claim needs the per-file ledger
-    (stream_merge_snapshot_drain's four versions) keep 1."""
-    import glob as _glob
-    import os
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        batch.repartitionByRange(n_parts, F.col("ts")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        # part-0000i is range partition i (ascending ts); pin mtimes
-        # to the same ascending order, 1 s apart
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        f"events_ordered{n_parts}",
-        sf_dir,
-        "events_ordered_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); session tz is pinned UTC
-        # so the cast preserves the wall-clock value (same handling as
-        # read_events_stream)
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-LATE_COHORTS = 3  # modulo split for the pinned-late-cohort stream
-
-
-def read_events_stream_cohorts(
-    spark: SparkSession, sf_dir: str, n_cohorts: int = LATE_COHORTS
-) -> DataFrame:
-    """Multi-micro-batch file stream with a PINNED LATE cohort: batch
-    k is every event_id ≡ k (mod n_cohorts) row. Every cohort spans
-    the WHOLE event-time range, so batch 0 advances the watermark to
-    (its frontier − delay) and each later batch is mostly stragglers
-    that arrive long after the watermark passed them. Because the
-    split is a pure event_id predicate and the file order is pinned
-    (mtimes 1 s apart, as in read_events_stream_ordered), the exact
-    set a watermark DISCARDS is a deterministic function of the table
-    alone — SQL-computable by an oracle. n_cohorts must be ≥ 3 to
-    observe drops at all: since SPARK-40925 the late-event filter of
-    batch k uses the watermark DISPLAYED for batch k−1 (one batch
-    behind the eviction watermark), so a 2-batch stream filters batch
-    1 against the initial 1970 watermark and never drops anything —
-    measured, not speculated (numRowsDroppedByWatermark stayed 0).
-    This staged adversary is what ``stream_late_drop_drain`` grades;
-    the ordered readers are its complement (no row ever late)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        t0 = 1_600_000_000
-        for i in range(n_cohorts):
-            sub = os.path.join(d, f"stage_{i}")
-            batch.filter(
-                F.col("event_id") % n_cohorts == i
-            ).coalesce(1).write.mode("overwrite").parquet(sub)
-            src = _glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"part-{i:05d}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-            shutil.rmtree(sub)
-
-    staged = _staged_dir(
-        f"events_cohorts{n_cohorts}",
-        sf_dir,
-        "events_cohorts_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); session tz is pinned UTC
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-THIN_MOD = 29  # idle-flush stream keeps every THIN_MOD-th event
-
-
-def read_events_stream_quartiles_thinned(
-    spark: SparkSession, sf_dir: str, n_parts: int = 4
-) -> DataFrame:
-    """Event-time-ordered multi-batch stream whose batch boundaries
-    are EXACTLY SQL-replayable: the events table thinned to every
-    THIN_MOD-th event_id (sparsity is the point — per-user activity
-    gaps are what let idle timeouts fire; the full table has every
-    user active in every batch), then split into ``n_parts`` files by
-    explicit row_number quartile over (ts, event_id) — unlike
-    repartitionByRange's sampled boundaries, ``floor((rn-1)·P/N)`` is
-    a pure function of the table, so an oracle can reconstruct each
-    micro-batch verbatim. Files carry ascending mtimes 1 s apart, one
-    file per trigger (the read_events_stream_ordered protocol)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        # count + global row_number live INSIDE build (round-11
-        # optimization pass): the staged dir is cached per process, but
-        # this count used to run as its own Spark job on EVERY call —
-        # one wasted job per bench run / oracle sweep after the first
-        thin = batch.filter(F.col("event_id") % THIN_MOD == 0)
-        w = Window.orderBy("ts", "event_id")
-        n_total = thin.count()
-        keyed = thin.withColumn(
-            "k",
-            F.floor(
-                (F.row_number().over(w) - 1) * n_parts / F.lit(n_total)
-            ).cast("int"),
-        )
-        t0 = 1_600_000_000
-        for i in range(n_parts):
-            sub = os.path.join(d, f"stage_{i}")
-            keyed.filter(F.col("k") == i).drop("k").coalesce(
-                1
-            ).write.mode("overwrite").parquet(sub)
-            src = _glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"part-{i:05d}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-            shutil.rmtree(sub)
-
-    staged = _staged_dir(
-        f"events_quartiles{n_parts}",
-        sf_dir,
-        "events_quartiles_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); session tz is pinned UTC
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-DUP_MOD = 5  # every DUP_MOD-th event gets an exact duplicate copy
-
-
-def read_events_stream_ordered_with_dups(
-    spark: SparkSession,
-    sf_dir: str,
-    n_parts: int = 4,
-    files_per_trigger: int = 1,
-) -> DataFrame:
-    """``read_events_stream_ordered`` over a corpus with PLANTED exact
-    duplicates: every DUP_MOD-th event appears twice (full-row copy, so
-    whichever copy a dedup operator keeps, the output is identical —
-    the winner choice stays deterministic). The fixture's event_ids are
-    naturally unique, so without this enrichment a streaming-dedup
-    grade would never execute a drop. Duplicate copies share the
-    original's event time, so range staging puts both in the same
-    micro-batch (range ties hash to one partition) and both are always
-    inside the watermark horizon."""
-    import glob as _glob
-    import os
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-    doubled = batch.unionByName(
-        batch.filter(F.col("event_id") % DUP_MOD == 0)
-    )
-
-    def build(d: str) -> None:
-        doubled.repartitionByRange(n_parts, F.col("ts")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        f"events_ordered_dup{n_parts}",
-        sf_dir,
-        "events_ordered_dup_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
 def merge_user_totals_sink(spark: SparkSession, target: str):
     """foreachBatch MERGE: each micro-batch's per-user aggregates are
     upserted into a versioned parquet table (matched rows accumulate,
@@ -988,139 +679,3 @@ def merge_user_totals_sink(spark: SparkSession, target: str):
         write_versioned(merged, target)
 
     return sink
-
-
-def _fresh_checkpoint(durable: bool = False) -> str:
-    """Ephemeral checkpoint dir for the harness drains, on tmpfs where
-    available (round-10 optimization pass, guide §6): the per-batch
-    offset-WAL, commit-log and state-store delta writes are each
-    fsync'd, and profiling showed them costing 90–370 ms per
-    micro-batch on the root disk (stateOperators commitTimeMs +
-    walCommit + commitOffsets in the query progress). For a drain whose
-    sink is an in-process memory table the checkpoint has NO durability
-    value beyond the process — recovery of a dead harness process
-    cannot resume into a sink that died with it — so memory-backed
-    storage is the correct local default, not a benchmark trick. In
-    production the sink is durable and the checkpoint goes to durable
-    storage: set $SPARK_GRAFT_STREAM_TMP (or pass an explicit
-    checkpointLocation) to any filesystem. Dirs are released at query
-    stop (``release_checkpoint``) with atexit as the backstop, same
-    hygiene as the staged source dirs.
-
-    GUARD (VERDICT r10 item 7): tmpfs is only legal when the sink
-    itself has no durability — a caller whose sink must survive the
-    process passes ``durable=True`` and NEVER silently inherits
-    /dev/shm (it gets $SPARK_GRAFT_STREAM_TMP or the disk tempdir)."""
-    import atexit  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    base = os.environ.get("SPARK_GRAFT_STREAM_TMP") or (
-        "/dev/shm"
-        if not durable and os.path.isdir("/dev/shm")
-        else tempfile.gettempdir()
-    )
-    os.makedirs(base, exist_ok=True)
-    d = tempfile.mkdtemp(prefix="sg_stream_ckpt_", dir=base)
-    if not _CKPT_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True)
-                     for p in _CKPT_DIRS]
-        )
-    _CKPT_DIRS.append(d)
-    return d
-
-
-_CKPT_DIRS: list[str] = []
-
-
-def _raw_checkpoint_fs(spark: SparkSession) -> None:
-    """Route checkpoint I/O on the local ``file:`` scheme through the
-    CRC-free RawLocalFs (round-11 optimization pass, guide §6). Every
-    per-batch checkpoint write — offset WAL, commit log, source
-    metadata log, state-store delta files — goes through Spark's
-    CheckpointFileManager, whose FileContext path resolves ``file:``
-    to the CHECKSUMMED LocalFs: each tiny write pays a full CRC pass
-    plus a twin ``.crc`` file create/write/rename. Measured on
-    stream_outer_join_drain at sf0.1: walCommit 36→19 ms, commitOffsets
-    38→18 ms, state commitTimeMs 650–820→320–470 ms summed, drain wall
-    4.4→3.8 s. The checksum adds nothing here: checkpoints are
-    ephemeral (see _fresh_checkpoint) and parquet data carries its own
-    page checksums. Production checkpoints live on HDFS/S3 schemes and
-    are untouched by this file:-scheme mapping."""
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs",
-    )
-
-
-def release_checkpoint(q) -> None:
-    """Remove a drained query's checkpoint dir NOW instead of waiting
-    for interpreter exit (ADVICE r10: a long session running many
-    drains would otherwise hold every offset-WAL/state-delta tree in
-    RAM-backed /dev/shm). Call after ``q.stop()``; no-op for queries
-    whose checkpoint this module did not create."""
-    import shutil  # noqa: PLC0415
-
-    d = getattr(q, "_sg_ckpt_dir", None)
-    if d is None:
-        return
-    shutil.rmtree(d, ignore_errors=True)
-    try:
-        _CKPT_DIRS.remove(d)
-    except ValueError:
-        pass
-
-
-def run_foreach_batch(result: DataFrame, sink, output_mode: str = "update"):
-    """foreachBatch sink: each micro-batch is handed to ``sink(df,
-    batch_id)`` as a BATCH DataFrame, so any batch writer — jdbc,
-    MERGE into Delta/Iceberg, partitioned parquet upsert — becomes a
-    streaming sink with exactly-once-per-batch semantics (batch_id is
-    the replay key for idempotence)."""
-    _raw_checkpoint_fs(result.sparkSession)
-    ckpt = _fresh_checkpoint()
-    q = (
-        result.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .start()
-    )
-    q._sg_ckpt_dir = ckpt
-    q.processAllAvailable()
-    return q
-
-
-def run_to_memory(
-    result: DataFrame, name: str, output_mode: str = "complete"
-):
-    """Drain a bounded file-source stream synchronously into a memory
-    sink (the local test harness; swap for a real sink in production).
-
-    Failure hygiene: a query that dies mid-drain is STOPPED before the
-    error propagates, and any still-active query holding ``name`` is
-    stopped before start — otherwise one failed drain poisons every
-    later invocation in the session with "query name already active",
-    masking the original error."""
-    spark = result.sparkSession
-    for aq in spark.streams.active:
-        if aq.name == name:
-            aq.stop()
-    _raw_checkpoint_fs(spark)
-    ckpt = _fresh_checkpoint()
-    q = (
-        result.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q._sg_ckpt_dir = ckpt
-    try:
-        q.processAllAvailable()
-    except Exception:
-        q.stop()
-        release_checkpoint(q)
-        raise
-    return q

@@ -110,3 +110,36 @@ def test_concat_ws_allowlist_has_no_stale_entries():
             live.add((rel, func))
     stale = set(CONCAT_WS_IN_HASH_OK) - live
     assert not stale, f"allowlist entries no longer in source: {stale}"
+
+
+_HADOOP_SET_RE = re.compile(r"hadoopConfiguration\(\)\s*\.set\w*\(")
+
+
+def _package_hits(pattern: re.Pattern) -> list[str]:
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        src = path.read_text()
+        for m in pattern.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            hits.append(f"{path.relative_to(PKG)}:{line}")
+    return hits
+
+
+def test_no_sparkcontext_hadoop_conf_mutation():
+    """A ``hadoopConfiguration().set…(`` changes the conf of every
+    session on the SparkContext, for the life of the process. Scope such
+    a setting to a session conf instead (streaming/drains.py does this
+    for the checkpoint file system)."""
+    hits = _package_hits(_HADOOP_SET_RE)
+    assert not hits, f"SparkContext-wide Hadoop conf mutation: {hits}"
+
+
+def test_streaming_queries_start_only_in_drains():
+    """Every streaming query in the package starts through
+    ``streaming.drains.drain`` — the one place that scopes the query's
+    confs, owns its checkpoint, and stops it on error."""
+    hits = [
+        h for h in _package_hits(re.compile(r"\.writeStream\b"))
+        if not h.startswith("streaming/drains.py:")
+    ]
+    assert not hits, f"writeStream outside streaming/drains.py: {hits}"

@@ -8,30 +8,28 @@ import pytest
 
 from data_warehouse_co_healthy_spark.catalog import load_table
 from data_warehouse_co_healthy_spark.streaming import events as se
+from data_warehouse_co_healthy_spark.streaming.drains import (
+    drain,
+    events_stream,
+)
 from tests.conftest import SF_DIR
 
 
-# function-scoped ON PURPOSE: a module-scoped stream would keep the
-# staged source dir captured at first use, and any test that exercises
-# the clear_staged_dirs() hook in between would delete that dir out
-# from under later tests (the stream then reads zero files). Staging
-# is cached, so re-deriving the DataFrame per test is cheap.
-@pytest.fixture
-def stream(spark):
-    return se.read_events_stream(spark, SF_DIR)
+# The events stream is re-derived inside every drain ON PURPOSE: a
+# module-scoped stream would keep the staged source dir captured at
+# first use, and any test that exercises the clear_staged_dirs() hook
+# in between would delete that dir out from under later tests (the
+# stream then reads zero files). Staging is cached, so re-deriving the
+# DataFrame per drain is cheap.
+def _drain(spark, shape, name, mode="complete"):
+    return drain(
+        spark, lambda s: shape(se.read_events_stream(s, SF_DIR)), name, mode
+    ).toPandas()
 
 
-def _drain(spark, result, name, mode="complete"):
-    q = se.run_to_memory(result, name, output_mode=mode)
-    try:
-        return spark.sql(f"SELECT * FROM {name}").toPandas()
-    finally:
-        q.stop()
-
-
-def test_windowed_counts_match_batch(spark, stream):
+def test_windowed_counts_match_batch(spark):
     got = (
-        _drain(spark, se.windowed_counts(stream), "win_counts")
+        _drain(spark, se.windowed_counts, "win_counts")
         .sort_values(["bucket", "event_type"])
         .reset_index(drop=True)
     )
@@ -52,16 +50,16 @@ def test_windowed_counts_match_batch(spark, stream):
     pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-6)
 
 
-def test_sessionized_runs(spark, stream):
-    out = _drain(spark, se.sessionized(stream), "sessions")
+def test_sessionized_runs(spark):
+    out = _drain(spark, se.sessionized, "sessions")
     assert len(out) > 0
     assert (out.session_end >= out.session_start).all()
     assert (out.n_events > 0).all()
 
 
-def test_running_user_totals_state(spark, stream):
+def test_running_user_totals_state(spark):
     out = _drain(
-        spark, se.running_user_totals(stream), "totals", mode="update"
+        spark, se.running_user_totals, "totals", mode="update"
     )
     assert len(out) > 0
     batch = load_table(spark, SF_DIR, "events").toPandas()
@@ -77,9 +75,9 @@ def test_running_user_totals_state(spark, stream):
     )
 
 
-def test_dedup_within_watermark(spark, stream):
+def test_dedup_within_watermark(spark):
     out = _drain(
-        spark, se.dedup_within_watermark(stream), "dedup_stream",
+        spark, se.dedup_within_watermark, "dedup_stream",
         mode="append",
     )
     n_batch = load_table(spark, SF_DIR, "events").count()
@@ -88,7 +86,7 @@ def test_dedup_within_watermark(spark, stream):
     assert out.event_id.is_unique
 
 
-def test_stream_static_join(spark, stream):
+def test_stream_static_join(spark):
     from pyspark.sql import functions as F
 
     users = (
@@ -102,7 +100,7 @@ def test_stream_static_join(spark, stream):
     )
     got = (
         _drain(
-            spark, se.enriched_counts(stream, users), "enriched",
+            spark, lambda st: se.enriched_counts(st, users), "enriched",
         )
         .sort_values(["bucket", "segment"])
         .reset_index(drop=True)
@@ -121,7 +119,7 @@ def test_stream_static_join(spark, stream):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_foreach_batch_sink(spark, stream, tmp_path):
+def test_foreach_batch_sink(spark, tmp_path):
     """foreachBatch: windowed counts land in a parquet target per
     micro-batch; final content equals the batch plan (last write wins
     per key is unnecessary here — one bounded batch)."""
@@ -134,18 +132,21 @@ def test_foreach_batch_sink(spark, stream, tmp_path):
         seen_batches.append(batch_id)
         df.write.mode("append").parquet(target)
 
-    q = se.run_foreach_batch(se.windowed_counts(stream), sink)
-    try:
-        got = (
-            spark.read.parquet(target)
-            .groupBy("bucket", "event_type")
-            .agg(F.max("n").alias("n"))  # replays keep the latest count
-            .toPandas()
-            .sort_values(["bucket", "event_type"])
-            .reset_index(drop=True)
-        )
-    finally:
-        q.stop()
+    drain(
+        spark,
+        lambda s: se.windowed_counts(se.read_events_stream(s, SF_DIR)),
+        None,
+        "update",
+        sink=sink,
+    )
+    got = (
+        spark.read.parquet(target)
+        .groupBy("bucket", "event_type")
+        .agg(F.max("n").alias("n"))  # replays keep the latest count
+        .toPandas()
+        .sort_values(["bucket", "event_type"])
+        .reset_index(drop=True)
+    )
     assert len(seen_batches) >= 1
     batch = load_table(spark, SF_DIR, "events")
     want = (
@@ -160,12 +161,12 @@ def test_foreach_batch_sink(spark, stream, tmp_path):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_stream_stream_join_matches_batch(spark, stream):
+def test_stream_stream_join_matches_batch(spark):
     from pyspark.sql import functions as F
 
     got = (
         _drain(
-            spark, se.purchase_attribution(stream), "attrib", mode="append",
+            spark, se.purchase_attribution, "attrib", mode="append",
         )
         .sort_values(["event_id", "click_id"])
         .reset_index(drop=True)
@@ -212,7 +213,7 @@ def test_multibatch_join_crosses_batches_and_matches_batch(spark):
 
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_join_multibatch_drain,
     )
     from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
@@ -261,7 +262,7 @@ def test_multibatch_join_crosses_batches_and_matches_batch(spark):
     # key on sf_dir too: the degenerate/empty-warehouse sweeps stage
     # their own events_ordered4 dirs under other sf_dirs in the same
     # session, and picking one of those made this assert vacuous-false
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         DRAIN_FILES_PER_TRIGGER,
     )
     d = [
@@ -312,7 +313,7 @@ def test_stream_outer_join_drain_null_emission(spark):
     min-side watermark encodes."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_outer_join_drain,
     )
 
@@ -356,7 +357,7 @@ def test_stream_session_drain_exact_gap_boundary(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_session_drain,
     )
 
@@ -408,29 +409,22 @@ def test_stream_late_drop_drain_drops_and_keeps(spark):
     watermark), so the filter is a boundary, not a drop-everything."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.streaming.events import (
-        read_events_stream_cohorts,
-        run_to_memory,
-    )
-
-    raw = read_events_stream_cohorts(spark, SF_DIR)
-    res = (
-        raw.withWatermark("ts", "24 hours")
+    progress = []
+    drain(
+        spark,
+        lambda s: events_stream(s, SF_DIR, "events_cohorts3")
+        .withWatermark("ts", "24 hours")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
+        .agg(F.count("*").alias("n")),
+        "late_drop_metrics",
+        "append",
+        progress=progress,
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = run_to_memory(res, "late_drop_metrics", output_mode="append")
-        dropped = sum(
-            (p.stateOperators[0].numRowsDroppedByWatermark or 0)
-            for p in q.recentProgress
-            if p.stateOperators
-        )
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    dropped = sum(
+        (p.stateOperators[0].numRowsDroppedByWatermark or 0)
+        for p in progress
+        if p.stateOperators
+    )
     assert dropped > 0, "no late rows were discarded by the watermark"
 
     events = load_table(spark, SF_DIR, "events")
@@ -450,7 +444,7 @@ def test_stream_late_drop_drain_drops_and_keeps(spark):
         F.col("event_id") % 3 == 2
     ).count() - kept_late  # sanity: filter split covers the cohort
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_late_drop_drain,
     )
 
@@ -470,35 +464,30 @@ def test_stream_join_late_drop_drain_drops_matches(spark):
     (pairs involving a cohort-2 event exist in the drained output)."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_join_late_drop_drain,
     )
     from data_warehouse_co_healthy_spark.streaming.events import (
         purchase_attribution,
-        read_events_stream_cohorts,
-        run_to_memory,
     )
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = run_to_memory(
-            purchase_attribution(
-                read_events_stream_cohorts(spark, SF_DIR),
-                horizon_min=24 * 60,
-                watermark="24 hours",
-            ),
-            "jld_metrics",
-            output_mode="append",
-        )
-        dropped_inputs = sum(
-            (p.stateOperators[0].numRowsDroppedByWatermark or 0)
-            for p in q.recentProgress
-            if p.stateOperators
-        )
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    progress = []
+    drain(
+        spark,
+        lambda s: purchase_attribution(
+            events_stream(s, SF_DIR, "events_cohorts3"),
+            horizon_min=24 * 60,
+            watermark="24 hours",
+        ),
+        "jld_metrics",
+        "append",
+        progress=progress,
+    )
+    dropped_inputs = sum(
+        (p.stateOperators[0].numRowsDroppedByWatermark or 0)
+        for p in progress
+        if p.stateOperators
+    )
     assert dropped_inputs > 0, (
         "join state operator dropped no late input rows"
     )
@@ -540,12 +529,9 @@ def test_stream_dedup_drain_actually_drops(spark):
     staging feeds MORE rows than the original table, and the drained
     output equals the original exactly — so state-store drops, not a
     pass-through, produced the result."""
-    from data_warehouse_co_healthy_spark.operators.temporal import (
-        stream_dedup_drain,
-    )
-    from data_warehouse_co_healthy_spark.streaming.events import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         DUP_MOD,
-        read_events_stream_ordered_with_dups,
+        stream_dedup_drain,
     )
     from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
 
@@ -553,7 +539,7 @@ def test_stream_dedup_drain_actually_drops(spark):
     n_orig = load_table(spark, SF_DIR, "events").count()
     assert got == n_orig
     # the staged input really contains the duplicates
-    read_events_stream_ordered_with_dups(spark, SF_DIR)
+    events_stream(spark, SF_DIR, "events_ordered_dup4")
     d = [
         v
         for k, v in _STAGED_DIRS.items()
@@ -627,7 +613,7 @@ def test_stream_incremental_merge_matches_batch(spark, tmp_path):
     from data_warehouse_co_healthy_spark.sources.writers import read_version
 
     target = str(tmp_path / "user_totals")
-    stream = se.read_events_stream_parts(spark, SF_DIR, n_parts=4)
+    stream = events_stream(spark, SF_DIR, "events_parts4")
     q = (
         stream.writeStream.outputMode("append")
         .foreachBatch(se.merge_user_totals_sink(spark, target))
@@ -661,7 +647,7 @@ def test_stream_incremental_merge_matches_batch(spark, tmp_path):
     )
 
 
-def test_running_user_totals_transform_with_state(spark, stream):
+def test_running_user_totals_transform_with_state(spark):
     """transformWithStateInPandas twin of running_user_totals: same
     final totals, on the RocksDB state store."""
     pytest.importorskip(
@@ -674,18 +660,23 @@ def test_running_user_totals_transform_with_state(spark, stream):
         "org.apache.spark.sql.execution.streaming."
         "state.RocksDBStateStoreProvider"
     )
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, rocks)
+    # the drain runs on its own session: set the provider there
+    saved = []
+
+    def tws(st):
+        session = st.sparkSession
+        saved.append((session, session.conf.get(key, None)))
+        session.conf.set(key, rocks)
+        return se.running_user_totals_tws(st)
+
     try:
-        out = _drain(
-            spark, se.running_user_totals_tws(stream), "totals_tws",
-            mode="update",
-        )
+        out = _drain(spark, tws, "totals_tws", mode="update")
     finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+        for session, old in saved:
+            if old is None:
+                session.conf.unset(key)
+            else:
+                session.conf.set(key, old)
     assert len(out) > 0
     batch = load_table(spark, SF_DIR, "events").toPandas()
     want = batch.groupby("user_id").agg(
@@ -698,18 +689,18 @@ def test_running_user_totals_transform_with_state(spark, stream):
     )
 
 
-def test_purchase_attribution_left_outer(spark, stream):
+def test_purchase_attribution_left_outer(spark):
     """Outer stream-stream join: matched rows identical to the inner
     join; null-click rows appear only for purchases the batch twin also
     leaves unmatched (emitted once the watermark passes)."""
     from pyspark.sql import functions as F
 
     inner = _drain(
-        spark, se.purchase_attribution(stream), "attr_in", mode="append"
+        spark, se.purchase_attribution, "attr_in", mode="append"
     )
     outer = _drain(
         spark,
-        se.purchase_attribution(stream, how="left_outer"),
+        lambda st: se.purchase_attribution(st, how="left_outer"),
         "attr_out",
         mode="append",
     )
@@ -747,7 +738,7 @@ def test_purchase_attribution_left_outer(spark, stream):
     assert not (set(nulls.event_id) & attributed)
 
 
-def test_zscore_stream_matches_batch_single_batch(spark, stream):
+def test_zscore_stream_matches_batch_single_batch(spark):
     """With the whole file in ONE micro-batch (event-time sorted within
     the batch), the stateful streaming scorer must flag exactly the
     rows the oracle-checked batch operator flags."""
@@ -756,7 +747,7 @@ def test_zscore_stream_matches_batch_single_batch(spark, stream):
     )
 
     got = (
-        _drain(spark, se.zscore_anomalies_stream(stream), "zs", "append")
+        _drain(spark, se.zscore_anomalies_stream, "zs", "append")
         .sort_values("event_id")
         .reset_index(drop=True)
     )
@@ -772,7 +763,7 @@ def test_zscore_stream_matches_batch_single_batch(spark, stream):
     )
 
 
-def test_windowed_distinct_users_tracks_exact(spark, stream):
+def test_windowed_distinct_users_tracks_exact(spark):
     """The streaming HLL distinct-per-window must track the exact batch
     count on every window: within 10% relative error OR 3 absolute —
     the absolute arm matters because fixture windows hold only ~10-60
@@ -782,7 +773,7 @@ def test_windowed_distinct_users_tracks_exact(spark, stream):
     from pyspark.sql import functions as F
 
     got = (
-        _drain(spark, se.windowed_distinct_users(stream), "win_users")
+        _drain(spark, se.windowed_distinct_users, "win_users")
         .set_index("bucket")
         .approx_users
     )
@@ -808,14 +799,14 @@ def test_streaming_simhash_dedup_matches_batch(spark):
     from data_warehouse_co_healthy_spark.llm import dedup
     from data_warehouse_co_healthy_spark.streaming import docs as sd
 
-    stream = sd.read_documents_stream(spark, SF_DIR)
-    q = se.run_to_memory(
-        sd.streaming_simhash_dedup(stream), "simdup", output_mode="update"
-    )
-    try:
-        got = spark.sql("SELECT * FROM simdup").toPandas()
-    finally:
-        q.stop()
+    got = drain(
+        spark,
+        lambda s: sd.streaming_simhash_dedup(
+            sd.read_documents_stream(s, SF_DIR)
+        ),
+        "simdup",
+        "update",
+    ).toPandas()
     got_pairs = {
         (min(a, b), max(a, b))
         for a, b in zip(got.doc_id, got.dup_of)
@@ -840,15 +831,12 @@ def test_streaming_quality_scores_match_batch(spark):
     from data_warehouse_co_healthy_spark.llm import training
     from data_warehouse_co_healthy_spark.streaming import docs as sd
 
-    q = se.run_to_memory(
-        sd.streaming_quality_scores(spark, SF_DIR),
+    got = drain(
+        spark,
+        lambda s: sd.streaming_quality_scores(s, SF_DIR),
         "qscores",
-        output_mode="append",
-    )
-    try:
-        got = spark.sql("SELECT * FROM qscores").toPandas()
-    finally:
-        q.stop()
+        "append",
+    ).toPandas()
     batch = training.quality_classifier(spark, SF_DIR).toPandas()
     m = got.merge(batch, on="vec_id", suffixes=("_s", "_b"))
     assert len(m) == len(batch) == len(got)
@@ -871,12 +859,13 @@ def test_streaming_media_decode_bit_equal_to_batch(spark):
     from data_warehouse_co_healthy_spark.streaming import docs as sd
 
     got = (
-        _drain(
+        drain(
             spark,
-            sd.streaming_media_decode(spark, SF_DIR),
+            lambda s: sd.streaming_media_decode(s, SF_DIR),
             "media_decode",
-            mode="append",
+            "append",
         )
+        .toPandas()
         .sort_values("file_name")
         .reset_index(drop=True)
     )
@@ -916,12 +905,13 @@ def test_streaming_jpeg_decode_bit_equal_to_batch(spark):
     from data_warehouse_co_healthy_spark.streaming import docs as sd
 
     got = (
-        _drain(
+        drain(
             spark,
-            sd.streaming_jpeg_decode(spark, SF_DIR),
+            lambda s: sd.streaming_jpeg_decode(s, SF_DIR),
             "jpeg_decode_stream",
-            mode="append",
+            "append",
         )
+        .toPandas()
         .sort_values("file_name")
         .reset_index(drop=True)
     )
@@ -964,12 +954,13 @@ def test_streaming_av_decode_bit_equal_to_batch(spark):
     from data_warehouse_co_healthy_spark.streaming import docs as sd
 
     got = (
-        _drain(
+        drain(
             spark,
-            sd.streaming_av_decode(spark, SF_DIR),
+            lambda s: sd.streaming_av_decode(s, SF_DIR),
             "av_decode_stream",
-            mode="append",
+            "append",
         )
+        .toPandas()
         .sort_values("file_name")
         .reset_index(drop=True)
     )
@@ -1033,7 +1024,7 @@ def test_staged_dir_rebuilds_when_fixture_rewritten(tmp_path):
     assert sd._STAGED_DIRS == {}
 
 
-def test_cusum_stream_matches_pure_replay(spark, stream):
+def test_cusum_stream_matches_pure_replay(spark):
     """The stateful streaming CUSUM must emit exactly the alarm rows a
     pure-Python replay of the same recursion produces over the fixture
     (per event_type, event-time order, same trained mean/std baseline)
@@ -1062,7 +1053,7 @@ def test_cusum_stream_matches_pure_replay(spark, stream):
     got = (
         _drain(
             spark,
-            se.cusum_drift_stream(stream, mean=mean, std=std),
+            lambda st: se.cusum_drift_stream(st, mean=mean, std=std),
             "cusum",
             "append",
         )
@@ -1104,7 +1095,7 @@ def test_cusum_stream_matches_pure_replay(spark, stream):
     pd.testing.assert_frame_equal(got, wantdf, check_dtype=False)
 
 
-def test_ohlc_stream_matches_batch_bars(spark, stream):
+def test_ohlc_stream_matches_batch_bars(spark):
     """Streaming OHLC bars drained over the bounded fixture must be
     BIT-identical to the batch ohlc_daily bars (deterministic
     (ts, event_id) tiebreaks on both sides)."""
@@ -1113,7 +1104,7 @@ def test_ohlc_stream_matches_batch_bars(spark, stream):
     )
 
     got = (
-        _drain(spark, se.ohlc_daily_stream(stream), "ohlc_stream")
+        _drain(spark, se.ohlc_daily_stream, "ohlc_stream")
         .sort_values("day")
         .reset_index(drop=True)
     )
@@ -1126,7 +1117,7 @@ def test_ohlc_stream_matches_batch_bars(spark, stream):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_clamped_balance_stream_matches_batch(spark, stream):
+def test_clamped_balance_stream_matches_batch(spark):
     """The O(1)-state streaming balance drained over the bounded
     fixture must be BIT-identical to the batch recursion (same op
     order, same rounding)."""
@@ -1135,7 +1126,7 @@ def test_clamped_balance_stream_matches_batch(spark, stream):
     )
 
     got = (
-        _drain(spark, se.clamped_balance_stream(stream),
+        _drain(spark, se.clamped_balance_stream,
                "clamped_stream", mode="append")
         .sort_values(["user_id", "event_id"])
         .reset_index(drop=True)
@@ -1164,6 +1155,8 @@ def test_stream_url_frontier_dedups_across_batches(spark):
         URL_HOSTS,
         URL_PATHS,
         _canonicalized,
+    )
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_url_frontier_drain,
     )
     from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
@@ -1223,15 +1216,15 @@ def test_stream_topk_drain_cross_batch_ranked_state(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.llm.filters import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         TOPK_K,
         stream_topk_drain,
     )
     from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
 
+    podium = stream_topk_drain(spark, SF_DIR)
     got = (
-        stream_topk_drain(spark, SF_DIR)
-        .toPandas()
+        podium.toPandas()
         .sort_values(["source", "rnk"])
         .reset_index(drop=True)
     )
@@ -1279,13 +1272,9 @@ def test_stream_topk_drain_cross_batch_ranked_state(spark):
     # update-mode snapshot ledger: one snapshot per (source, batch
     # carrying that source), n_seen strictly increasing to the
     # source's total row count
-    # the drain runs in the reserved drain child session (round-11
-    # conf-isolation) — the memory sink registers in ITS catalog
-    from data_warehouse_co_healthy_spark.operators.temporal import (
-        _drain_session,
-    )
-
-    snap = _drain_session(spark).table("stream_topk_sink").toPandas()
+    # the drain runs in its reserved child session — the memory sink
+    # registers in ITS catalog
+    snap = podium.sparkSession.table("stream_topk_sink").toPandas()
     totals = (
         docs.groupBy("source").count().toPandas().set_index("source")
     )["count"]
@@ -1313,11 +1302,11 @@ def test_stream_idle_flush_drain_timeout_lifecycle(spark):
     that user's events ending at last_ts."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         IDLE_MS,
         stream_idle_flush_drain,
     )
-    from data_warehouse_co_healthy_spark.streaming.events import THIN_MOD
+    from data_warehouse_co_healthy_spark.streaming.drains import THIN_MOD
 
     got = stream_idle_flush_drain(spark, SF_DIR).toPandas()
     assert len(got) > 0
@@ -1367,10 +1356,10 @@ def test_stream_chained_state_drain_dedup_feeds_agg(spark):
     is sensitive to the operator chain, not just the final agg."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_chained_state_drain,
     )
-    from data_warehouse_co_healthy_spark.streaming.events import DUP_MOD
+    from data_warehouse_co_healthy_spark.streaming.drains import DUP_MOD
 
     got = (
         stream_chained_state_drain(spark, SF_DIR)
@@ -1423,7 +1412,7 @@ def test_stream_merge_snapshot_drain_version_ledger(spark):
     one-shot batch aggregate in exact cents."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_merge_snapshot_drain,
     )
     from data_warehouse_co_healthy_spark.sources import hadoopfs
@@ -1473,7 +1462,7 @@ def test_stream_static_join_drain_keeps_every_event(spark):
     join against the customer dim drops NOTHING (every user_id maps to
     an existing c_custkey) and all 5 market segments appear — pin
     both, plus the complete-mode snapshot totals."""
-    from data_warehouse_co_healthy_spark.operators.temporal import (
+    from data_warehouse_co_healthy_spark.streaming.drains import (
         stream_static_join_drain,
     )
 

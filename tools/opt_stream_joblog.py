@@ -62,31 +62,30 @@ def main() -> None:
     jobs = {}
     stages = {}
     tasks_ms = {}
-    if True:
-        for line in lines:
-            try:
-                e = json.loads(line)
-            except Exception:  # noqa: BLE001
-                continue
-            k = e.get("Event")
-            if k == "SparkListenerJobStart":
-                jobs[e["Job ID"]] = {
-                    "t0": e["Submission Time"],
-                    "desc": (e.get("Properties") or {}).get(
-                        "spark.job.description", ""
-                    )[:60],
-                }
-            elif k == "SparkListenerJobEnd":
-                j = jobs.get(e["Job ID"])
-                if j:
-                    j["t1"] = e["Completion Time"]
-            elif k == "SparkListenerTaskEnd":
-                sid = e["Stage ID"]
-                info = e.get("Task Info", {})
-                tasks_ms[sid] = tasks_ms.get(sid, 0) + (
-                    info.get("Finish Time", 0) - info.get("Launch Time", 0)
-                )
-                stages[sid] = stages.get(sid, 0) + 1
+    for line in lines:
+        try:
+            e = json.loads(line)
+        except Exception:  # noqa: BLE001
+            continue
+        k = e.get("Event")
+        if k == "SparkListenerJobStart":
+            jobs[e["Job ID"]] = {
+                "t0": e["Submission Time"],
+                "desc": (e.get("Properties") or {}).get(
+                    "spark.job.description", ""
+                )[:60],
+            }
+        elif k == "SparkListenerJobEnd":
+            j = jobs.get(e["Job ID"])
+            if j:
+                j["t1"] = e["Completion Time"]
+        elif k == "SparkListenerTaskEnd":
+            sid = e["Stage ID"]
+            info = e.get("Task Info", {})
+            tasks_ms[sid] = tasks_ms.get(sid, 0) + (
+                info.get("Finish Time", 0) - info.get("Launch Time", 0)
+            )
+            stages[sid] = stages.get(sid, 0) + 1
     recent = [
         (jid, j) for jid, j in sorted(jobs.items())
         if j.get("t0", 0) >= mark and "t1" in j

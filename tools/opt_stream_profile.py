@@ -34,26 +34,18 @@ def main() -> None:
 
     fn = entrymod.queries()[name]
 
-    # patch run_to_memory/run_foreach_batch to capture the query object
-    from data_warehouse_co_healthy_spark.streaming import events as ev
+    # every drain starts through streaming.drains.drain: have it hand
+    # each query's recentProgress to this list
+    from data_warehouse_co_healthy_spark.streaming import drains
 
     captured: list = []
+    real_drain = drains.drain
 
-    real_to_memory = ev.run_to_memory
-    real_foreach = ev.run_foreach_batch
+    def spy_drain(*args, **kwargs):
+        kwargs["progress"] = captured
+        return real_drain(*args, **kwargs)
 
-    def spy_to_memory(result, qname, output_mode="complete"):
-        q = real_to_memory(result, qname, output_mode=output_mode)
-        captured.append(q)
-        return q
-
-    def spy_foreach(result, sink, output_mode="update"):
-        q = real_foreach(result, sink, output_mode=output_mode)
-        captured.append(q)
-        return q
-
-    ev.run_to_memory = spy_to_memory
-    ev.run_foreach_batch = spy_foreach
+    drains.drain = spy_drain
 
     # warm once (staging dirs, JIT) then measure a second cold-ish run
     for label in ("warm", "measured"):
@@ -66,31 +58,30 @@ def main() -> None:
             print(f"== warm run: {wall:.2f}s")
             continue
         print(f"== measured run: {wall:.2f}s")
-        for q in captured:
-            for p in q.recentProgress:
-                d = p.get("durationMs", {})
-                so = [
-                    {
-                        k: s.get(k)
-                        for k in (
-                            "operatorName",
-                            "commitTimeMs",
-                            "numRowsTotal",
-                            "numShufflePartitions",
-                        )
-                    }
-                    for s in p.get("stateOperators", [])
-                ]
-                print(
-                    json.dumps(
-                        {
-                            "batchId": p.get("batchId"),
-                            "numInputRows": p.get("numInputRows"),
-                            "durationMs": d,
-                            "stateOperators": so,
-                        }
+        for p in captured:
+            d = p.get("durationMs", {})
+            so = [
+                {
+                    k: s.get(k)
+                    for k in (
+                        "operatorName",
+                        "commitTimeMs",
+                        "numRowsTotal",
+                        "numShufflePartitions",
                     )
+                }
+                for s in p.get("stateOperators", [])
+            ]
+            print(
+                json.dumps(
+                    {
+                        "batchId": p.get("batchId"),
+                        "numInputRows": p.get("numInputRows"),
+                        "durationMs": d,
+                        "stateOperators": so,
+                    }
                 )
+            )
 
 
 if __name__ == "__main__":

@@ -9,10 +9,13 @@ Usage: python tools/run_stream_demo.py [sf_dir] [output_dir]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -22,6 +25,10 @@ from data_warehouse_co_healthy_spark.sources.writers import (  # noqa: E402
     read_version,
 )
 from data_warehouse_co_healthy_spark.streaming import events as se  # noqa: E402
+from data_warehouse_co_healthy_spark.streaming.drains import (  # noqa: E402
+    drain,
+    events_stream,
+)
 
 
 def main() -> None:
@@ -31,29 +38,31 @@ def main() -> None:
     spark = get_spark("stream-demo")
 
     # 1. a stream that "arrives over time": 4 files, 1 per trigger
-    stream = se.read_events_stream_parts(spark, sf_dir, n_parts=4)
+    def arrivals(s):
+        return events_stream(s, sf_dir, "events_parts4")
 
     # 2. windowed counts with watermark → memory sink (monitoring view)
-    q1 = se.run_to_memory(
-        se.windowed_counts(stream), "demo_win", output_mode="complete"
-    )
-    q1.stop()
-    win = spark.sql(
-        "SELECT * FROM demo_win ORDER BY bucket, event_type LIMIT 5"
+    win = drain(
+        spark,
+        lambda s: se.windowed_counts(arrivals(s)),
+        "demo_win",
+        "complete",
     )
     print("windowed counts (first 5):")
-    win.show(truncate=False)
+    win.orderBy("bucket", "event_type").limit(5).show(truncate=False)
 
     # 3. incremental MERGE into versioned snapshots (4 micro-batches
-    #    → 4 snapshot versions, each a consistent upsert)
-    stream2 = se.read_events_stream_parts(spark, sf_dir, n_parts=4)
+    #    → 4 snapshot versions, each a consistent upsert); the target
+    #    is durable, so the checkpoint is too
     target = f"{out}/user_totals"
-    q2 = se.run_foreach_batch(
-        stream2.select("user_id", "value"),
-        se.merge_user_totals_sink(spark, target),
-        output_mode="append",
+    drain(
+        spark,
+        lambda s: arrivals(s).select("user_id", "value"),
+        None,
+        "append",
+        sink=se.merge_user_totals_sink(spark, target),
+        durable=True,
     )
-    q2.stop()
 
     # 4. reconcile the final snapshot against batch ground truth
     final = read_version(spark, target)
